@@ -2,8 +2,8 @@
 (reference: databuilder/job/job.py:53-89, task/task.py:49-77).
 
 The reference's volcano pull loop (extract one record -> transform -> load)
-disappears: a job here is a declarative composition
-``sources -> model expansions -> union -> stamp -> stage/publish`` whose
+disappears: a job here is a declarative composition ``sources -> model
+expansions -> union -> stamp -> cache -> validate -> stage/publish`` whose
 execution Spark schedules lazily. The reference's LIFO closer and statsd
 counters map to a try/finally summary; publisher on-success callbacks map
 to 'finalize runs only after every write action completed'
@@ -55,9 +55,13 @@ class CatalogJob:
 
     def graph(self) -> GraphOutput:
         assert self._outputs, "no model expansions added"
-        out = union_graphs(*self._outputs)
+        out = stamp_publish_tag(union_graphs(*self._outputs),
+                                self.publish_tag, self.epoch_ms)
+        out.nodes.cache(), out.rels.cache()
+        # stamping only touches props, so the checks see the union's rows;
+        # validating after the cache scans the graph once for every consumer
         validate_graph(out, strict=self.strict_validation)
-        return stamp_publish_tag(out, self.publish_tag, self.epoch_ms)
+        return out
 
     def run(self, stage_dir: str | None = None,
             node_writer: Callable | None = None,
@@ -70,7 +74,6 @@ class CatalogJob:
         summary: dict = {"publish_tag": self.publish_tag}
         try:
             graph = self.graph()
-            graph.nodes.cache(), graph.rels.cache()
             summary["nodes"] = graph.nodes.count()
             summary["rels"] = graph.rels.count()
             if stage_dir is not None:

@@ -10,8 +10,8 @@ a write-time concern — SURVEY §7.4).
 
 Validation mirrors graph_serializable.py:68-91: node key/label non-null,
 label Title-cased, relation type UPPER-cased. ``validate_graph`` returns the
-violating rows as DataFrames (strict mode raises), keeping the check
-set-level instead of per-record asserts.
+violating rows as DataFrames (strict mode counts them in one aggregate per
+side and raises), keeping the check set-level instead of per-record asserts.
 """
 
 from __future__ import annotations
@@ -110,20 +110,28 @@ def union_graphs(*outputs: GraphOutput) -> GraphOutput:
 def validate_graph(out: GraphOutput, strict: bool = False) -> dict[str, DataFrame]:
     """Set-level CHECK constraints (reference:
     graph_serializable.py:68-91): returns {check: violating rows}.
-    strict=True raises on the first non-empty violation set."""
+    strict=True counts every check's violations in one ``count_if``
+    aggregate per side (nodes, then rels) and raises
+    ``graph validation failed: <check>`` for the first check that has any."""
     first_char = F.substring(F.col(NODE_LABEL), 1, 1)
-    checks = {
-        "node_key_null": out.nodes.where(F.col(NODE_KEY).isNull()),
-        "node_label_not_title": out.nodes.where(
-            (first_char != F.upper(first_char)) | (F.col(NODE_LABEL) == "")),
-        "rel_type_not_upper": out.rels.where(
-            F.col(REL_TYPE) != F.upper(F.col(REL_TYPE))),
-        "rel_key_null": out.rels.where(
-            F.col(REL_START_KEY).isNull() | F.col(REL_END_KEY).isNull()),
-    }
+    sides = [
+        (out.nodes, {
+            "node_key_null": F.col(NODE_KEY).isNull(),
+            "node_label_not_title":
+                (first_char != F.upper(first_char)) | (F.col(NODE_LABEL) == ""),
+        }),
+        (out.rels, {
+            "rel_type_not_upper": F.col(REL_TYPE) != F.upper(F.col(REL_TYPE)),
+            "rel_key_null":
+                F.col(REL_START_KEY).isNull() | F.col(REL_END_KEY).isNull(),
+        }),
+    ]
     if strict:
-        for name, df in checks.items():
-            bad = df.limit(1).count()
-            if bad:
-                raise ValueError(f"graph validation failed: {name}")
-    return checks
+        for df, checks in sides:
+            counts = df.agg(*[F.count_if(cond).alias(name)
+                              for name, cond in checks.items()]).first()
+            for name in checks:
+                if counts[name]:
+                    raise ValueError(f"graph validation failed: {name}")
+    return {name: df.where(cond)
+            for df, checks in sides for name, cond in checks.items()}

@@ -80,6 +80,37 @@ def diff_generations(old: DataFrame, new: DataFrame,
             .where(F.col("change") != "unchanged"))
 
 
+def send_batches(items, send: Callable[[object, list], None],
+                 batch_size: int, key: Callable[[object], object] = lambda _: None,
+                 max_retries: int = 1, retry_sleep_sec: float = 0.0) -> None:
+    """Group ``items`` into one batch per ``key(item)``; call
+    ``send(key, batch)`` each time a batch reaches ``batch_size``, then once
+    for every non-empty remainder in first-seen order. A failing ``send`` is
+    retried up to ``max_retries`` attempts in all, sleeping
+    ``retry_sleep_sec`` between them (reference: neo4j_csv_publisher.py
+    :326-342 transaction batching + TransientError retry)."""
+    batches: dict = {}
+
+    def flush(k) -> None:
+        batch = batches.pop(k)
+        for attempt in range(max_retries):
+            try:
+                send(k, batch)
+                return
+            except Exception:  # noqa: BLE001 — mirror TransientError retry
+                if attempt == max_retries - 1:
+                    raise
+                time.sleep(retry_sleep_sec)
+
+    for item in items:
+        k = key(item)
+        batches.setdefault(k, []).append(item)
+        if len(batches[k]) >= batch_size:
+            flush(k)
+    for k in list(batches):
+        flush(k)
+
+
 def pre_delete_edges(rels: DataFrame,
                      delete_batch: Callable[[list[dict]], None],
                      edge_types: frozenset[str],
@@ -90,18 +121,8 @@ def pre_delete_edges(rels: DataFrame,
     ``delete_batch`` receives (START_KEY, END_KEY, TYPE) dicts."""
     targets = rels.where(F.col("TYPE").isin(*edge_types)) \
         .select("START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE")
-
-    def send(partition) -> None:
-        batch: list[dict] = []
-        for row in partition:
-            batch.append(row.asDict())
-            if len(batch) >= batch_size:
-                delete_batch(batch)
-                batch = []
-        if batch:
-            delete_batch(batch)
-
-    targets.foreachPartition(send)
+    targets.foreachPartition(lambda rows: send_batches(
+        (r.asDict() for r in rows), lambda _, b: delete_batch(b), batch_size))
 
 
 def publish_nodes(nodes: DataFrame,
@@ -124,31 +145,14 @@ def publish_nodes(nodes: DataFrame,
 
     co_labels = set(create_only_labels)
 
-    def send(partition) -> None:
-        buckets: dict[str, list[dict]] = {}
-        def flush(mode: str) -> None:
-            rows = buckets.pop(mode, [])
-            if not rows:
-                return
-            for attempt in range(max_retries):
-                try:
-                    upsert_batch(mode, rows)
-                    return
-                except Exception:  # noqa: BLE001 — mirror TransientError retry
-                    if attempt == max_retries - 1:
-                        raise
-                    time.sleep(retry_sleep_sec)
-        for row in partition:
-            label = row["LABEL"]
-            mode = (f"create_only:{label}" if label in co_labels
-                    else f"merge:{label}")
-            buckets.setdefault(mode, []).append(row.asDict())
-            if len(buckets[mode]) >= batch_size:
-                flush(mode)
-        for mode in list(buckets):
-            flush(mode)
+    def mode(row: dict) -> str:
+        label = row["LABEL"]
+        return (f"create_only:{label}" if label in co_labels
+                else f"merge:{label}")
 
-    nodes.foreachPartition(send)
+    nodes.foreachPartition(lambda rows: send_batches(
+        (r.asDict() for r in rows), upsert_batch, batch_size, key=mode,
+        max_retries=max_retries, retry_sleep_sec=retry_sleep_sec))
 
 
 def publish_rels(rels: DataFrame,
@@ -158,25 +162,7 @@ def publish_rels(rels: DataFrame,
     """Relationship MERGE batches; the writer is expected to materialize
     the bidirectional pair (TYPE + REVERSE_TYPE) exactly as the
     reference's Cypher does (neo4j_csv_publisher.py:235-287)."""
-    def send(partition) -> None:
-        batch: list[dict] = []
-        def flush() -> None:
-            nonlocal batch
-            if not batch:
-                return
-            rows, batch = batch, []
-            for attempt in range(max_retries):
-                try:
-                    upsert_batch("merge_rel", rows)
-                    return
-                except Exception:  # noqa: BLE001
-                    if attempt == max_retries - 1:
-                        raise
-                    time.sleep(retry_sleep_sec)
-        for row in partition:
-            batch.append(row.asDict())
-            if len(batch) >= batch_size:
-                flush()
-        flush()
-
-    rels.foreachPartition(send)
+    rels.foreachPartition(lambda rows: send_batches(
+        (r.asDict() for r in rows), upsert_batch, batch_size,
+        key=lambda _: "merge_rel", max_retries=max_retries,
+        retry_sleep_sec=retry_sleep_sec))

@@ -20,6 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from amundsendatabuilder_spark.plans.publish import send_batches
+
 
 class StalenessGuardError(RuntimeError):
     pass
@@ -73,14 +75,7 @@ def sweep(existing: DataFrame, current_tag: str,
     validate_staleness(existing, stale, key_cols[-1], staleness_max_pct)
     delete_set = stale.select(*key_cols)
     if not dry_run and delete_batch is not None:
-        def send(partition) -> None:
-            batch: list[dict] = []
-            for row in partition:
-                batch.append(row.asDict())
-                if len(batch) >= batch_size:
-                    delete_batch(batch)
-                    batch = []
-            if batch:
-                delete_batch(batch)
-        delete_set.foreachPartition(send)
+        delete_set.foreachPartition(lambda rows: send_batches(
+            (r.asDict() for r in rows), lambda _, b: delete_batch(b),
+            batch_size))
     return delete_set

@@ -19,6 +19,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from amundsendatabuilder_spark.plans.publish import send_batches
+
 
 def _json_lines(docs: DataFrame) -> DataFrame:
     # ignoreNullFields=false: the reference's json.dumps emits
@@ -43,19 +45,9 @@ def publish(docs: DataFrame, *, new_index: str, alias: str,
     ``alias`` (add new, remove+delete old) — reference
     elasticsearch_publisher.py:93-123. ``bulk_index(index, json_lines)``
     and ``update_aliases(alias, new_index)`` wrap the ES client."""
-    json_docs = _json_lines(docs)
-
-    def send(partition) -> None:
-        batch: list[str] = []
-        for row in partition:
-            batch.append(row.value)
-            if len(batch) >= batch_size:
-                bulk_index(new_index, batch)
-                batch = []
-        if batch:
-            bulk_index(new_index, batch)
-
-    json_docs.foreachPartition(send)
+    _json_lines(docs).foreachPartition(lambda rows: send_batches(
+        (r.value for r in rows), lambda _, b: bulk_index(new_index, b),
+        batch_size))
     # driver-side atomic finalize AFTER every partition succeeded — the
     # same commit-ordering contract as the reference's alias update
     update_aliases(alias, new_index)

@@ -4,9 +4,11 @@ loader/file_system_neo4j_csv_loader.py + serializers/neo4_serializer.py).
 Reference behaviors reproduced set-level:
 - node CSVs sharded by (label, attribute-column-set); rel CSVs by
   (start_label, end_label, type, column-set) — the 'ragged attribute sets'
-  trap (loader :111-139,189-191; SURVEY §7.4). Here the shard key is a
-  computed schema-hash column and the write is one
-  ``partitionBy(label, schema_hash)`` pass;
+  trap (loader :111-139,189-191; SURVEY §7.4). The column set is keyed by
+  an md5 over the sorted property names. One aggregation, grouped by the
+  shard key, finds every shard and the sorted non-null property names its
+  rows carry; then each shard is written once, as one CSV file whose
+  header holds exactly those properties;
 - ``:UNQUOTED`` header suffix for int/bool attributes
   (serializers/neo4_serializer.py:52-58) via a per-label property-type
   registry (the reference infers from Python value types; a registry is
@@ -19,6 +21,7 @@ Reference behaviors reproduced set-level:
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,80 +39,52 @@ UNQUOTED_PROPS = {
     "apache_airflow": "bool",
 }
 
-
 def _header_name(prop: str) -> str:
     if prop in UNQUOTED_PROPS:
         return f"{prop}:UNQUOTED"
     return prop
 
 
-def _prop_columns(df: DataFrame) -> list[str]:
-    """Distinct property names present in the props map (driver-side — the
-    set of property names is tiny and bounded by the model schemas)."""
-    rows = (df.select(F.explode(F.map_keys("props")).alias("k"))
-            .distinct().collect())
-    return sorted(r[0] for r in rows)
+def _write_shards(df: DataFrame, out_dir: str, fixed: tuple[str, ...],
+                  keys: tuple[str, ...], sort: tuple[str, ...]) -> list[str]:
+    """Write one CSV shard directory per (``keys``, property-name set) under
+    ``out_dir``, named ``{key values joined by _}_{hash[:8]}``. Each shard
+    holds the ``fixed`` columns, then its non-null properties in sorted
+    order, rows sorted by ``sort``. Returns the shard paths written."""
+    schema_hash = F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props"))))
+    non_null = F.map_keys(F.map_filter("props", lambda _, v: v.isNotNull()))
+    shards = (df.groupBy(*keys, schema_hash.alias("_schema_hash"))
+              .agg(F.array_sort(F.array_distinct(F.flatten(
+                  F.collect_list(non_null)))).alias("_props"))
+              .collect())
+    paths: list[str] = []
+    for *key_values, shash, props in sorted(shards, key=lambda r: tuple(r)[:-1]):
+        in_shard = reduce(lambda a, b: a & b,
+                          [F.col(k) == v for k, v in zip(keys, key_values)],
+                          schema_hash == shash)
+        out = df.where(in_shard).select(
+            *fixed, *[F.col("props")[p].alias(_header_name(p)) for p in props],
+        ).orderBy(*sort)
+        path = os.path.join(out_dir, "_".join(map(str, [*key_values, shash[:8]])))
+        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
+        paths.append(path)
+    return paths
 
 
 def write_nodes_csv(nodes: DataFrame, out_dir: str) -> list[str]:
-    """Write per-(label, column-set) node CSV shard directories under
-    ``out_dir/nodes``. Returns the shard paths written."""
-    props = _prop_columns(nodes)
-    wide = nodes.select(
-        F.col("KEY"), F.col("LABEL"),
-        *[F.col("props")[p].alias(p) for p in props],
-        F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props")))).alias("_schema_hash"),
-    )
-    paths: list[str] = []
-    # one pass per (label, schema-hash) group: each shard gets exactly the
-    # columns its rows carry — reproducing the ragged-file behavior without
-    # per-record dict bookkeeping
-    shards = [tuple(r) for r in
-              wide.select("LABEL", "_schema_hash").distinct().collect()]
-    for label, shash in sorted(shards):
-        shard = wide.where((F.col("LABEL") == label)
-                           & (F.col("_schema_hash") == shash))
-        present = [p for p in props
-                   if shard.where(F.col(p).isNotNull()).limit(1).count() > 0]
-        out = shard.select(
-            F.col("KEY").alias("KEY"), F.col("LABEL").alias("LABEL"),
-            *[F.col(p).alias(_header_name(p)) for p in present],
-        ).orderBy("KEY")
-        path = os.path.join(out_dir, "nodes", f"{label}_{shash[:8]}")
-        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-        paths.append(path)
-    return paths
+    """Per-(label, column-set) node shards under ``out_dir/nodes``."""
+    return _write_shards(nodes, os.path.join(out_dir, "nodes"),
+                         ("KEY", "LABEL"), ("LABEL",), ("KEY",))
 
 
 def write_rels_csv(rels: DataFrame, out_dir: str) -> list[str]:
-    """Write per-(start,end,type,column-set) relationship CSV shards under
+    """Per-(start, type, end, column-set) relationship shards under
     ``out_dir/rels`` (reference loader :141-177)."""
-    props = _prop_columns(rels)
-    wide = rels.select(
-        "START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
-        "REVERSE_TYPE",
-        *[F.col("props")[p].alias(p) for p in props],
-        F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props")))).alias("_schema_hash"),
-    )
-    paths: list[str] = []
-    shards = [tuple(r) for r in wide.select(
-        "START_LABEL", "END_LABEL", "TYPE", "_schema_hash").distinct().collect()]
-    for start, end, typ, shash in sorted(shards):
-        shard = wide.where((F.col("START_LABEL") == start)
-                           & (F.col("END_LABEL") == end)
-                           & (F.col("TYPE") == typ)
-                           & (F.col("_schema_hash") == shash))
-        present = [p for p in props
-                   if shard.where(F.col(p).isNotNull()).limit(1).count() > 0]
-        out = shard.select(
-            "START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
-            "REVERSE_TYPE",
-            *[F.col(p).alias(_header_name(p)) for p in present],
-        ).orderBy("START_KEY", "END_KEY")
-        path = os.path.join(out_dir, "rels", f"{start}_{typ}_{end}_{shash[:8]}")
-        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-        paths.append(path)
-    return paths
+    return _write_shards(rels, os.path.join(out_dir, "rels"),
+                         ("START_KEY", "START_LABEL", "END_KEY", "END_LABEL",
+                          "TYPE", "REVERSE_TYPE"),
+                         ("START_LABEL", "TYPE", "END_LABEL"),
+                         ("START_KEY", "END_KEY"))
 
 
 def write_graph(out: GraphOutput, out_dir: str) -> dict[str, list[str]]:

@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 
 from amundsendatabuilder_spark.models.rds import FK_ORDER
+from amundsendatabuilder_spark.plans.publish import send_batches
 
 
 def publish_relational(tables: dict[str, DataFrame],
@@ -30,17 +31,9 @@ def publish_relational(tables: dict[str, DataFrame],
         if df is None:
             continue
 
-        def send(partition, _name=name) -> None:
-            batch: list[dict] = []
-            for row in partition:
-                batch.append(row.asDict())
-                if len(batch) >= batch_size:
-                    upsert_batch(_name, batch)
-                    batch = []
-            if batch:
-                upsert_batch(_name, batch)
-
-        df.foreachPartition(send)
+        df.foreachPartition(lambda rows, _name=name: send_batches(
+            (r.asDict() for r in rows), upsert_batch, batch_size,
+            key=lambda _: _name))
 
 
 def write_jdbc_append(df: DataFrame, url: str, table: str,

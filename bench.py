@@ -277,82 +277,21 @@ EXTENDED = [
 # mid-round.
 CALIB_REF = 0.509
 
-# Extended entries whose plan or semantics changed THIS round (r12
-# verdict item #6: the full 197-entry extended sweep costs ~350s/run and
-# re-measures mostly-unchanged plans; the headline-25 plus the round's
-# changed entries is the signal). Default bench mode re-times HEADLINE +
-# these; SPARK_GRAFT_BENCH_EXTENDED=all runs the full extended set (the
-# every-few-rounds full record and on-demand audits), =none headline only.
-#
-# FRESHNESS CONTRACT (r13 verdict item #3): CHANGED_ROUND must equal the
-# round this list was rebuilt for. tests/test_bench_format.py derives the
-# current round from VERDICT.md's header (round N's verdict exists while
-# round N+1 builds) and fails if the marker is stale — a forgotten
-# rebuild now breaks the suite instead of silently re-timing last
-# round's entries. The marker is also emitted in the headline JSON as
-# ``changed_round`` so the recorded artifact carries the provenance.
-CHANGED_ROUND = 16
-CHANGED_THIS_ROUND: "list[str]" = [
-    # r16 is the second OPTIMIZATION round: entries are added here as
-    # their plans change (outputs stay hash-identical — every optimized
-    # query re-verifies against the DuckDB oracle before it lands).
-    # Wave 1 (inherited commit a19bf0c, verified by this session) —
-    # mutual_nn_pairs mutuality as a canonical-pair count (top1
-    # self-join removed: the whole candidate+scoring+argmax pipeline
-    # previously planned twice); _power_iterate lazy single-plan rounds
-    # (no per-round checkpoint/broadcast-build jobs); covariance pair
-    # generator parallelized + register consumers exchange-free
-    "embedding_covariance",
-    "pca_power_iteration",
-    "pca_explained_variance",
-    "pca_top_components",
-    "mutual_nn_dedup",
-    "mutual_nn_dedup_capped",
-    "mutual_nn_recall_report",
-    # Wave 2 — mutual_nn candidate exchange pinned wide + keyed by src
-    # (AQE byte-coalescing serialized the cosine scoring chain onto one
-    # core; the src key makes the distinct AND the top-1 agg reuse the
-    # one exchange) — covered by the mutual_nn entries above.
-    # logreg_holdout_auc derives its split sides as corpus filters via
-    # leakage_safe_split(keep=...) instead of two corpus-x-corpus
-    # joins. Two logreg_train loop restructurings (label fuse;
-    # persist co-partitioning) were built, measured WORSE in 6
-    # interleaved fresh-JVM A/B rounds, and reverted — the r15 loop
-    # body stands byte-identical, so the other logreg entries' plans
-    # end the round unchanged and are not listed.
-    "logreg_holdout_auc",
-    # Wave 4 — jaccard_prefix_join verify exchange pinned wide + keyed
-    # by doc_a (same AQE byte-coalescing disease as mutual_nn: 965k
-    # array_intersect verifications serialized onto 1-2 tasks; ~10%
-    # quiet win and removes a 7x contention cliff)
-    "jaccard_prefix_join",
-    "jaccard_prefix_join_capped",
-    "jaccard_prefix_join_frac_capped",
-    # Wave 5 — same disease, same fix: embedding_near_duplicates
-    # candidate exchange pinned wide + keyed by id_a (6.2 -> 2.0 s);
-    # triangle_counts' oriented-edge checkpoint pinned wide keyed by
-    # (a, b) — the b-only first cut left the wedge stage skewed
-    # (12.5 -> 7.3 s). dedup_embedding_cosine / _exhaustive_recall /
-    # _clusters also changed but are not bench entries.
-    "triangle_cooccurrence",
-    "dedup_embedding_cosine_bucketed",
-    "dedup_embedding_bucketed_capped",
-]
-
 
 def _extended_to_run() -> "list[str]":
-    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "changed")
+    """Extended entries to time after the headline:
+    SPARK_GRAFT_BENCH_EXTENDED=all runs the full extended set (the
+    periodic full record and on-demand audits); =none (the default) runs
+    the headline only."""
+    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "none")
     if mode == "all":
         return EXTENDED
-    if mode == "none":
-        return []
-    if mode != "changed":
+    if mode != "none":
         # fail loudly: a typo ("al", "ALL") silently falling back to the
-        # pruned mode would get recorded as if deliberate (r13 ADVICE)
+        # headline-only mode would get recorded as if deliberate
         raise ValueError(
-            f"SPARK_GRAFT_BENCH_EXTENDED={mode!r} — expected one of "
-            "'all', 'none', 'changed'")
-    return [q for q in EXTENDED if q in CHANGED_THIS_ROUND]
+            f"SPARK_GRAFT_BENCH_EXTENDED={mode!r} — expected 'all' or 'none'")
+    return []
 
 
 def _calib_df(spark):
@@ -450,7 +389,7 @@ def main() -> None:
     calib_end = calibration_probe(spark)
     print(f"# calibration_probe_end: {calib_end}s", file=sys.stderr)
 
-    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "changed")
+    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "none")
     for line in summary_lines(timings, sf_dir, n_runs, calib, calib_end,
                               extended_mode=mode, calib_mid=calib_mid):
         print(line)
@@ -509,7 +448,6 @@ def summary_lines(timings: "dict[str, float]", sf_dir: str,
                 round(total * CALIB_REF / calib_mean, 3)
                 if calib_mean > 0 else None),
             "calib_ref": CALIB_REF,
-            "changed_round": CHANGED_ROUND,
             "unit": "sec",
             "n": n_runs,
             "n_queries": len(HEADLINE),

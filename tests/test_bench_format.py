@@ -80,57 +80,15 @@ def test_calib_adjusted_value_formula():
     assert no_probe["value_calib_adjusted"] is None
 
 
-def test_changed_this_round_names_are_registered():
-    """A typo in CHANGED_THIS_ROUND would silently drop the entry from
-    the default (pruned) bench run — every name must be a real bench
-    entry AND a registered query."""
-    from amundsendatabuilder_spark.plans.oracle_suite import QUERIES
-    benched = set(bench.HEADLINE) | set(bench.EXTENDED)
-    for name in bench.CHANGED_THIS_ROUND:
-        assert name in benched, name
-        assert name in QUERIES, name
-
-
-def test_changed_this_round_is_fresh():
-    """r13 verdict item #3: nothing failed if a round forgot to rebuild
-    CHANGED_THIS_ROUND — the default bench would silently re-time LAST
-    round's entries and record them as deliberate. The current round is
-    derived from VERDICT.md's header (`# VERDICT — round N` is written
-    AFTER round N, so round N+1 builds while it reads N); a stale
-    CHANGED_ROUND marker now fails the suite."""
-    import re
-    # resolve relative to the repo this test file lives in (not a
-    # hard-coded /root/repo) and anchor to the known header shape so a
-    # reworded first line fails loudly instead of matching a stray
-    # "round N" elsewhere in the sentence (r14 ADVICE). The round
-    # number may carry a trailing parenthetical (the r15 header reads
-    # "round 15 (optimization round 1 of 2)"), so anchor the NUMBER and
-    # allow an optional annotation after it.
-    verdict = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "VERDICT.md")
-    with open(verdict, encoding="utf-8") as f:
-        m = re.match(r"# VERDICT — round (\d+)\s*(\(.*\))?\s*$",
-                     f.readline())
-    assert m, "VERDICT.md header did not match '# VERDICT — round N'"
-    current_round = int(m.group(1)) + 1
-    assert bench.CHANGED_ROUND == current_round, (
-        f"bench.CHANGED_ROUND is {bench.CHANGED_ROUND} but the current "
-        f"round is {current_round} — rebuild CHANGED_THIS_ROUND for "
-        "this round's plan changes (and bump the marker)")
-
-
 def test_extended_pruning_modes(monkeypatch):
-    """r12 verdict item #6: default bench re-times HEADLINE + the
-    round's CHANGED extended entries only; =all keeps the full-record
+    """Default bench times the headline only; =all keeps the full-record
     path; summary_lines sums whatever subset actually ran."""
     monkeypatch.delenv("SPARK_GRAFT_BENCH_EXTENDED", raising=False)
-    changed = bench._extended_to_run()
-    assert set(changed) == set(
-        q for q in bench.EXTENDED if q in bench.CHANGED_THIS_ROUND)
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "all")
-    assert bench._extended_to_run() == bench.EXTENDED
+    assert bench._extended_to_run() == []
     monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "none")
     assert bench._extended_to_run() == []
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "all")
+    assert bench._extended_to_run() == bench.EXTENDED
     # r13 ADVICE: a typo must fail loudly, not silently prune
     monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "al")
     try:
@@ -139,14 +97,20 @@ def test_extended_pruning_modes(monkeypatch):
         assert "al" in str(exc)
     else:
         raise AssertionError("typo'd extended mode did not raise")
-    # a pruned run's summary sums only the entries that ran
-    timings = {q: 0.1 for q in bench.HEADLINE + changed}
+    # a run's summary sums only the extended entries that ran
+    timings = {q: 0.1 for q in bench.HEADLINE}
     head = json.loads(bench.summary_lines(
-        timings, "/root/testdata/sf0.1", 3, calib=0.5,
-        extended_mode="changed")[-1])
-    assert head["n_extended"] == len(changed)
-    assert head["extended_mode"] == "changed"
-    assert abs(head["extended_total"] - 0.1 * len(changed)) < 1e-9
+        timings, "testdata/sf0.1", 3, calib=0.5,
+        extended_mode="none")[-1])
+    assert head["n_extended"] == 0
+    assert head["extended_mode"] == "none"
+    assert head["extended_total"] == 0
+    head = json.loads(bench.summary_lines(
+        _fake_timings(), "testdata/sf0.1", 3, calib=0.5,
+        extended_mode="all")[-1])
+    assert head["n_extended"] == len(bench.EXTENDED)
+    assert head["extended_mode"] == "all"
+    assert abs(head["extended_total"] - 0.1 * len(bench.EXTENDED)) < 1e-9
 
 
 def test_detail_line_carries_every_query():

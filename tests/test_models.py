@@ -3,6 +3,7 @@ mirroring the reference's tests/unit/models/ strategy (SURVEY §5)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import FIXTURES
@@ -150,6 +151,32 @@ def test_graph_validation(tables_df):
     out = expand_tables(tables_df)
     checks = validate_graph(out, strict=True)  # should not raise
     assert all(df.limit(1).count() == 0 for df in checks.values())
+
+
+@pytest.mark.parametrize("check,node,rel", [
+    ("node_key_null", (None, "Table"), ("a", "b", "TABLE")),
+    ("node_label_not_title", ("k", "table"), ("a", "b", "TABLE")),
+    ("rel_type_not_upper", ("k", "Table"), ("a", "b", "Table")),
+    ("rel_key_null", ("k", "Table"), (None, "b", "TABLE")),
+])
+def test_graph_validation_strict_names_each_check(spark, check, node, rel):
+    """Each strict check raises under its own name, and the non-strict
+    result holds exactly the violating row under that name."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, validate_graph
+    nodes = spark.createDataFrame(
+        [(*node, {})], "KEY string, LABEL string, props map<string,string>")
+    start, end, typ = rel
+    rels = spark.createDataFrame(
+        [(start, "Table", end, "Column", typ, "TABLE_OF", {})],
+        "START_KEY string, START_LABEL string, END_KEY string, "
+        "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+        "props map<string,string>")
+    out = GraphOutput(nodes, rels)
+    with pytest.raises(ValueError, match=f"graph validation failed: {check}$"):
+        validate_graph(out, strict=True)
+    counts = {name: df.count() for name, df in validate_graph(out).items()}
+    assert counts == {name: int(name == check) for name in counts}
+    assert len(counts) == 4
 
 
 def test_expand_users_manager_self_join(spark):

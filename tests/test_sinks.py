@@ -27,6 +27,111 @@ def test_graph_csv_shards(tables_df, tmp_path):
     assert {"Table", "Column", "Tag", "Badge", "Database"} <= labels
 
 
+def test_graph_csv_ragged_headers(spark, tmp_path):
+    """Within one shard (one label and one property-name set), a property
+    that is null in every row is left out of the header, and one that is
+    null in only some rows keeps its column with empty cells. Header
+    columns are sorted and int/bool properties carry :UNQUOTED."""
+    import hashlib
+
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    props = "map<string,string>"
+    nodes = spark.createDataFrame([
+        ("k2", "Column", {"name": "c2", "sort_order": "2", "gone": None,
+                          "desc": None}),
+        ("k1", "Column", {"name": "c1", "sort_order": "1", "gone": None,
+                          "desc": "x"}),
+        ("t1", "Table", {"name": "t", "is_view": "false"}),
+    ], f"KEY string, LABEL string, props {props}")
+    rels = spark.createDataFrame([
+        ("t1", "Table", "k1", "Column", "READ", "READ_BY",
+         {"read_count": "3", "note": None}),
+        ("t1", "Table", "k2", "Column", "READ", "READ_BY",
+         {"read_count": None, "note": None}),
+    ], "START_KEY string, START_LABEL string, END_KEY string, "
+       f"END_LABEL string, TYPE string, REVERSE_TYPE string, props {props}")
+    write_graph(GraphOutput(nodes, rels), str(tmp_path))
+
+    def shard(kind, name, keys):
+        h = hashlib.md5(",".join(sorted(keys)).encode()).hexdigest()[:8]
+        (f,) = glob.glob(str(tmp_path / kind / f"{name}_{h}" / "*.csv"))
+        return open(f).read().splitlines()
+
+    assert shard("nodes", "Column", ["name", "sort_order", "gone", "desc"]) == [
+        "KEY,LABEL,desc,name,sort_order:UNQUOTED",
+        "k1,Column,x,c1,1",
+        "k2,Column,,c2,2"]
+    assert shard("nodes", "Table", ["name", "is_view"]) == [
+        "KEY,LABEL,is_view:UNQUOTED,name", "t1,Table,false,t"]
+    assert shard("rels", "Table_READ_Column", ["read_count", "note"]) == [
+        "START_KEY,START_LABEL,END_KEY,END_LABEL,TYPE,REVERSE_TYPE,"
+        "read_count:UNQUOTED",
+        "t1,Table,k1,Column,READ,READ_BY,3",
+        "t1,Table,k2,Column,READ,READ_BY,"]
+    assert len(os.listdir(tmp_path / "nodes")) == 2
+    assert len(os.listdir(tmp_path / "rels")) == 1
+
+
+def test_graph_csv_jobs_do_not_grow_with_properties(spark, tmp_path):
+    """Staging a graph runs the same number of Spark jobs whether each
+    shard carries one property or twenty: the shard columns come from one
+    aggregation, not from one probe per property."""
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    sc = spark.sparkContext
+
+    def jobs_for(n_props):
+        props = {f"p{i:02d}": "v" for i in range(n_props)}
+        nodes = spark.createDataFrame(
+            [(f"k{i}", label, props) for i in range(4)
+             for label in ("Table", "Column")],
+            "KEY string, LABEL string, props map<string,string>")
+        rels = spark.createDataFrame(
+            [(f"k{i}", "Table", f"k{i}", "Column", "COLUMN", "COLUMN_OF",
+              props) for i in range(4)],
+            "START_KEY string, START_LABEL string, END_KEY string, "
+            "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+            "props map<string,string>")
+        group = f"graph_csv_jobs_{n_props}"
+        sc.setJobGroup(group, group)
+        try:
+            paths = write_graph(GraphOutput(nodes, rels),
+                                str(tmp_path / str(n_props)))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert (len(paths["nodes"]), len(paths["rels"])) == (2, 1)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_for(1) == jobs_for(20)
+
+
+def test_send_batches_order_limits_and_retry():
+    """One batch per key, flushed at the size limit and then in first-seen
+    order; a failing send is retried up to max_retries attempts in all."""
+    from amundsendatabuilder_spark.plans.publish import send_batches
+    sent = []
+    send_batches(["a1", "b1", "a2", "a3", "b2", "c1"],
+                         lambda k, b: sent.append((k, b)), 2,
+                         key=lambda s: s[0])
+    assert sent == [("a", ["a1", "a2"]), ("b", ["b1", "b2"]),
+                    ("a", ["a3"]), ("c", ["c1"])]
+
+    attempts = []
+
+    def flaky(k, b):
+        attempts.append(b)
+        if len(attempts) < 3:
+            raise RuntimeError("transient")
+
+    send_batches([1, 2], flaky, 10, max_retries=3)
+    assert attempts == [[1, 2]] * 3
+    attempts.clear()
+    with pytest.raises(RuntimeError):
+        send_batches([1], flaky, 10)
+    assert attempts == [[1]]
+
+
 def test_es_json_sorted_keys(spark, tmp_path):
     from amundsendatabuilder_spark.sinks.es_json import write_documents
     df = spark.createDataFrame([(1, "b", "a")], "zz int, mm string, aa string")
